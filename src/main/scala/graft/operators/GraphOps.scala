@@ -412,8 +412,7 @@ object GraphOps {
     * Freshness contract: the MV path carries a fingerprint (size + mtime
     * inventory) of the SOURCE lineitem relation, so a rebuilt/changed
     * corpus can never silently serve a stale edge set — it simply misses
-    * and rebuilds (the same staleness discipline Bench's data_sha applies
-    * to merge eligibility). `refresh = true` is the explicit REFRESH
+    * and rebuilds. `refresh = true` is the explicit REFRESH
     * MATERIALIZED VIEW: it recomputes even on a fingerprint hit.
     * Idempotent per JVM via the object lock + `_SUCCESS` marker; a
     * partial/aborted write (no marker) is overwritten on next access.

@@ -669,7 +669,7 @@ object Multimodal {
     * exactly (r+g+b)/3 (PNG is lossless); constant/alternating PCM ⇒ RMS is
     * an exact binary double (¼, ½). Idempotent and atomic: each file is
     * written to a temp name and moved into place only if absent, so repeated
-    * sessions (and the Verify/Bench drivers) reuse the same bytes.
+    * sessions (and the Verify main) reuse the same bytes.
     */
   private[graft] def ensureMediaFixtures(): String = synchronized {
     import java.nio.file.{Files, Paths, StandardCopyOption}

@@ -173,34 +173,28 @@ class CollapsePropertySpec extends SparkSpecBase {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
       assert(gotComponents == expComponents,
         s"components diverge: exp=$expComponents got=$gotComponents")
+      // the DataFrame-level twin the corpus pipeline runs: same components
+      val fromDocs = TextOps.nearDupClustersFrom(
+        rows.toDF("doc_id", "text", "lang", "source", "n_chars"), 0.3)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
+      assert(fromDocs == expComponents,
+        s"nearDupClustersFrom diverges: exp=$expComponents got=$fromDocs")
     }
 
-    test(s"seed $seed: large-star/small-star CC ≡ pure-Scala union-find on random edge graphs") {
+    test(s"seed $seed: min-label CC ≡ pure-Scala union-find on random edge graphs") {
       val rng = new scala.util.Random(seed * 7 + 1)
       // mixed topology: random sparse edges + a long chain (high diameter)
-      // + self-loops and duplicate/reversed edges (must be ignored/normalized)
+      // + self-loops and duplicate/reversed edges (a self-loop node is its
+      // own component; duplicates change nothing)
       val n = 60
       val chain = (0 until 15).map(i => (i.toLong, (i + 1).toLong))
       val random = Seq.fill(50)((rng.nextInt(n).toLong, rng.nextInt(n).toLong))
-      val edges = (chain ++ random ++ Seq((5L, 5L)) ++ chain.map(_.swap)).toDF("u", "v")
-      val exp = refComponents(
-        (chain ++ random).filter(e => e._1 != e._2)
-          .map(e => (math.min(e._1, e._2), math.max(e._1, e._2), 1.0)).toSet)
+      val all = chain ++ random ++ Seq((5L, 5L)) ++ chain.map(_.swap)
+      val exp = refComponents(all.map(e => (e._1, e._2, 1.0)).toSet)
         .toSeq.sortBy(_._1)
-      val got = TextOps.ccLargeSmallStar(edges)
+      val got = TextOps.ccMinLabel(all.toDF("u", "v"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
       assert(got == exp, s"CC diverges: exp=$exp got=$got")
-    }
-
-    test(s"seed $seed: nearDupClustersFrom largestar ≡ minlabel on a random corpus") {
-      val rows = mkCorpus(seed)
-      val docs = rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-      val minlabel = TextOps.nearDupClustersFrom(docs, 0.3)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-      val largestar = TextOps.nearDupClustersFrom(docs, 0.3, algorithm = "largestar")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-      assert(largestar == minlabel,
-        s"largestar clusters diverge from minlabel: exp=$minlabel got=$largestar")
     }
 
     test(s"seed $seed: collapsed novelty/boilerplate/incremental ≡ pure-Scala references") {

@@ -61,4 +61,27 @@ class PipelineSpec extends SparkSpecBase {
       Pipeline.run(spark, csvPath, wh, expectedRows = Some(999999L))
     }
   }
+
+  // a two-row staging CSV whose second row is `bad`
+  private def csvWith(bad: String): String = {
+    val dir = tempDir()
+    Files.writeString(java.nio.file.Paths.get(dir, "quotes.csv"),
+      "date,symbol,open,high,low,close,volume\n" +
+        "2024-01-02,AAA,10.0,11.0,9.0,10.5,100\n" + bad + "\n")
+    dir
+  }
+
+  test("a null close aborts at the quality gate") {
+    val e = intercept[IllegalArgumentException] {
+      Pipeline.run(spark, csvWith("2024-01-03,AAA,10.0,11.0,9.0,,100"), tempDir())
+    }
+    assert(e.getMessage.contains("quality gate failed"), e.getMessage)
+  }
+
+  test("close above high aborts on the ohlc_bounds expectation") {
+    val e = intercept[IllegalArgumentException] {
+      Pipeline.run(spark, csvWith("2024-01-03,AAA,10.0,11.0,9.0,12.0,100"), tempDir())
+    }
+    assert(e.getMessage.contains("ohlc_bounds"), e.getMessage)
+  }
 }
